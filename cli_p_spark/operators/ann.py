@@ -707,4 +707,8 @@ def link_ann_join(
         scored, group_cols=keys, order_col="score", k=k,
         tiebreak_cols=["entity_id"],
     )
-    return top.filter(F.col("score") >= tau)
+    # the entity_id join key leads the joined schema; restore the k=1
+    # and broadcast column order
+    return top.filter(F.col("score") >= tau).select(
+        *keys, *carry, "entity_id", "score", "rank"
+    )

@@ -79,10 +79,6 @@ def _one():
     return F.lit(1).cast("decimal(3,2)")
 
 
-def _dsql(c: str) -> str:
-    return f"CAST({c} AS DECIMAL(18,2))"
-
-
 # ---------------------------------------------------------------------------
 # aggregation / scan / filter
 # ---------------------------------------------------------------------------
@@ -1868,8 +1864,10 @@ UNION ALL SELECT 'neardup_unique',
 def kg_triples_exact(spark, sf_dir):
     """Exact rank-1 linking from STAGED mention embeddings + entities —
     the DuckDB twin re-derives the same triples with window SQL."""
+    import numpy as np
+
     from ..fixtures.generate import entities_to_spark
-    from ..operators.link import link_exact_broadcast
+    from ..operators.ann import link_ivf_broadcast, train_centroids
     from .pipeline import triples_from_links
 
     cfg = PipelineConfig()
@@ -1879,7 +1877,13 @@ def kg_triples_exact(spark, sf_dir):
         entities_to_spark(spark, ents_pdf).select("entity_id", "embedding"),
         "kg_entities",
     )
-    links = link_exact_broadcast(staged_m, ents_pdf, k=cfg.k, tau=-1.0)
+    # exact search: a one-cell index probed at its only cell
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=1
+    )
+    links = link_ivf_broadcast(
+        staged_m, ents_pdf, centroids, k=cfg.k, tau=-1.0, nprobe=1
+    )
     rescored = _seqdot_rescore(links, staged_m, staged_e, cfg.tau)
     return triples_from_links(rescored).select(
         "subj", "pred", "obj", F.round("score", 4).alias("score"), "span_idx"
@@ -2288,7 +2292,7 @@ def kg_canonical_triples(spark, sf_dir):
     """Full pipeline: ANN link + CC canonicalization (subj = canonical
     id).  Triples and near-dup edges are staged; BOTH engines then run
     connected components over the same staged edges — Spark with the
-    salted large-star/small-star operator, DuckDB with a recursive-CTE
+    large-star/small-star operator, DuckDB with a recursive-CTE
     min-label reachability — and must agree on every canonical id."""
     from ..operators.ccomp import canonical_mapping, connected_components
     from .pipeline import build_kg
@@ -2920,7 +2924,7 @@ def _kg_communities_sql() -> str:
 def kg_components(spark, sf_dir):
     """Weakly-connected-component census of the entity graph — the most
     basic KG health metric (one blob or many islands, and how big):
-    salted alternating-star connected components (operators/ccomp.py)
+    alternating-star connected components (operators/ccomp.py)
     over the shared staged (subj -> obj) edges, undirected, aggregated
     to the (component_size, n_components) histogram.  Integer outputs
     only — bit-exact by construction.  The DuckDB twin replays a

@@ -84,7 +84,6 @@ def run_pipeline(
     nprobe: int = 32,
     fail_after_parts: int | None = None,
     fail_mode: str = "after_lineage",
-    link_strategy: str = "broadcast",
 ) -> dict[str, str]:
     """Execute (or resume) the KG pipeline into ``out_dir``.
 
@@ -99,12 +98,7 @@ def run_pipeline(
     """
     import numpy as np
 
-    from ..fixtures.generate import entities_to_spark
-    from ..operators.ann import (
-        link_ann_join,
-        link_ivf_broadcast,
-        train_centroids,
-    )
+    from ..operators.ann import link_ivf_broadcast, train_centroids
     from .tables import TableStore
 
     store = TableStore(spark, out_dir)
@@ -202,20 +196,12 @@ def run_pipeline(
     )
     emat = np.stack(entities_pdf["embedding"].to_numpy())
     centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
-    if link_strategy == "broadcast":
-        # entity index fits executors (the reference's own regime) -> the
-        # zero-shuffle GEMM search; 'join' = bucket equi-join for entity
-        # sides too big to broadcast (identical results, tested)
-        links = link_ivf_broadcast(
-            mentions, entities_pdf, centroids,
-            k=cfg.k, tau=cfg.tau, nprobe=nprobe,
-        )
-    else:
-        entities = entities_to_spark(spark, entities_pdf)
-        links = link_ann_join(
-            mentions, entities, centroids, k=cfg.k, tau=cfg.tau,
-            nprobe=nprobe,
-        )
+    # entity index fits executors (the reference's own regime) -> the
+    # zero-shuffle GEMM search
+    links = link_ivf_broadcast(
+        mentions, entities_pdf, centroids,
+        k=cfg.k, tau=cfg.tau, nprobe=nprobe,
+    )
     triples = triples_from_links(links)
     store.overwrite(triples, "triples")
     n_triples = store.read("triples").count()

@@ -12,6 +12,12 @@ Arrow-batched UDFs (encode, GEMM search).  At 100 TB the plan has exactly
 ONE shuffle (the explicit repartition before encode — and even that is
 optional when input partitioning is already balanced); linking against a
 broadcast index adds none.
+
+These stages carry the embedding column between encode and link, so
+they back the pipelines that need it: ``build_kg`` (LSH canonicalisation)
+and ``plans/lineage.run_pipeline`` (persists vectors for resume).
+Triples alone come from ``operators/fused.fused_triples``, which never
+materialises the vectors.
 """
 
 from __future__ import annotations
@@ -21,7 +27,6 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.encoder import make_encode_udf
-from ..operators.link import link_exact_broadcast
 
 MENTION_COLS = ["doc_id", "span_idx", "kind", "offset", "content"]
 
@@ -121,54 +126,6 @@ def triples_from_links(links: DataFrame) -> DataFrame:
     )
 
 
-def build_triples_ann(
-    documents: DataFrame,
-    entities_pdf,
-    cfg: PipelineConfig = PipelineConfig(),
-    nlist: int = 100,
-    nprobe: int = 32,
-    strategy: str = "broadcast",
-) -> tuple[DataFrame, DataFrame]:
-    """M3: ANN linking (operators/ann.py).
-
-    strategy='broadcast': IVF search vs broadcast bucketed index inside
-    mapInPandas — zero shuffle, the default (entity index fits executors,
-    the reference's own regime).  strategy='join': bucket equi-join — for
-    entity sides too big to broadcast.  Identical results (both tested).
-    nlist/nprobe defaults are the reference's own (build-index.py:81,
-    query-index.py:30); nprobe=nlist degenerates to exact search.
-    P/R vs the exact oracle gated >=0.95 in tests/test_ann_link.py.
-    """
-    import numpy as np
-
-    from ..fixtures.generate import entities_to_spark
-    from ..operators.ann import (
-        link_ann_join,
-        link_ivf_broadcast,
-        train_centroids,
-    )
-
-    spans = explode_spans(documents)
-    encoded = encode_mentions(spans, cfg)
-    ok, skips = split_skips(encoded)
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
-
-    emat = np.stack(entities_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
-
-    if strategy == "broadcast":
-        links = link_ivf_broadcast(
-            mentions, entities_pdf, centroids,
-            k=cfg.k, tau=cfg.tau, nprobe=nprobe,
-        )
-    else:
-        entities = entities_to_spark(documents.sparkSession, entities_pdf)
-        links = link_ann_join(
-            mentions, entities, centroids, k=cfg.k, tau=cfg.tau, nprobe=nprobe
-        )
-    return triples_from_links(links), skips
-
-
 def mention_edges(
     mentions: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
@@ -259,18 +216,3 @@ def build_kg(
         "mentions": mentions,
     }
 
-
-def build_triples_exact(
-    documents: DataFrame,
-    entities_pdf,
-    cfg: PipelineConfig = PipelineConfig(),
-) -> tuple[DataFrame, DataFrame]:
-    """M1 flagship: exact (broadcast-GEMM) linking. Returns (triples, skips)."""
-    spans = explode_spans(documents)
-    encoded = encode_mentions(spans, cfg)
-    ok, skips = split_skips(encoded)
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
-    links = link_exact_broadcast(
-        mentions, entities_pdf, k=cfg.k, tau=cfg.tau
-    )
-    return triples_from_links(links), skips

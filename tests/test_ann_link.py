@@ -2,19 +2,48 @@
 nprobe=nlist degenerates to exact (reference parity: query-index.py:30)."""
 
 import numpy as np
+import pytest
 
 from cli_p_spark.config import PipelineConfig
-from cli_p_spark.fixtures.generate import documents_to_spark
+from cli_p_spark.fixtures.generate import documents_to_spark, entities_to_spark
+from cli_p_spark.operators.ann import (
+    link_ann_join,
+    link_ivf_broadcast,
+    train_centroids,
+)
+from cli_p_spark.operators.fused import fused_triples
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
-from cli_p_spark.plans.pipeline import build_triples_ann
+from cli_p_spark.plans.pipeline import (
+    encode_mentions,
+    explode_spans,
+    split_skips,
+    triples_from_links,
+)
+
+
+def _centroids(ents_pdf, nlist):
+    emat = np.stack(ents_pdf["embedding"].to_numpy())
+    return train_centroids(emat, nlist=nlist)
+
+
+def _modular_mentions(docs, cfg):
+    """The modular encode chain: (mentions with embeddings, skips)."""
+    ok, skips = split_skips(encode_mentions(explode_spans(docs), cfg))
+    return ok.select("doc_id", "span_idx", "kind", "embedding"), skips
 
 
 def test_ann_pipeline_pr_geq_095(spark, corpus_small):
+    """The bucket equi-join regime (entity side not broadcast) holds the
+    P/R gate at the reference's nlist=100 / nprobe=32."""
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_ann(docs, ents_pdf, cfg, nlist=100, nprobe=32)
-    got = triples.toPandas()
+    mentions, _ = _modular_mentions(docs, cfg)
+    links = link_ann_join(
+        mentions, entities_to_spark(spark, ents_pdf),
+        _centroids(ents_pdf, 100), k=cfg.k, tau=cfg.tau, nprobe=32,
+    )
+    got = triples_from_links(links).toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(got, golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
@@ -27,8 +56,8 @@ def test_nprobe_equals_nlist_is_exact(spark, corpus_small):
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
     nlist = 32
-    triples, _ = build_triples_ann(
-        docs, ents_pdf, cfg, nlist=nlist, nprobe=nlist
+    triples, _ = fused_triples(
+        docs, ents_pdf, _centroids(ents_pdf, nlist), cfg, nprobe=nlist
     )
     got = triples.toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
@@ -40,17 +69,27 @@ def test_nprobe_equals_nlist_is_exact(spark, corpus_small):
     assert (merged["score_s"] - merged["score_o"]).abs().max() < 1e-9
 
 
-def test_broadcast_and_join_strategies_agree(spark, corpus_small):
+@pytest.mark.parametrize("k", [1, 3])
+def test_broadcast_and_join_strategies_agree(spark, corpus_small, k):
     """Two physical strategies, one logical operator: the IVF broadcast
-    search and the bucket equi-join must produce identical links."""
+    search and the bucket equi-join must produce identical links, in the
+    same column order."""
     docs_pdf, ents_pdf = corpus_small
-    cfg = PipelineConfig()
+    cfg = PipelineConfig(k=k)
     docs = documents_to_spark(spark, docs_pdf)
-    key = ["subj", "span_idx", "pred", "obj"]
-    a, _ = build_triples_ann(docs, ents_pdf, cfg, strategy="broadcast")
-    b, _ = build_triples_ann(docs, ents_pdf, cfg, strategy="join")
-    ra = sorted(map(tuple, a.select(*key).collect()))
-    rb = sorted(map(tuple, b.select(*key).collect()))
+    mentions, _ = _modular_mentions(docs, cfg)
+    centroids = _centroids(ents_pdf, 100)
+    a = link_ivf_broadcast(
+        mentions, ents_pdf, centroids, k=k, tau=cfg.tau, nprobe=32
+    )
+    b = link_ann_join(
+        mentions, entities_to_spark(spark, ents_pdf), centroids,
+        k=k, tau=cfg.tau, nprobe=32,
+    )
+    assert a.columns == b.columns
+    key = ["subj", "span_idx", "obj", "rank"]
+    ra = sorted(map(tuple, triples_from_links(a).select(*key).collect()))
+    rb = sorted(map(tuple, triples_from_links(b).select(*key).collect()))
     assert ra == rb
 
 
@@ -58,8 +97,8 @@ def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_ann(
-        docs, ents_pdf, cfg, nlist=100, nprobe=32, strategy="broadcast"
+    triples, _ = fused_triples(
+        docs, ents_pdf, _centroids(ents_pdf, 100), cfg, nprobe=32
     )
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
@@ -69,19 +108,17 @@ def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
 def test_fused_path_agrees_with_modular(spark, corpus_small):
     """Fused encode+search emits the same triples AND the same skips as
     the modular encode->link chain."""
-    import numpy as np
-
-    from cli_p_spark.fixtures.generate import documents_to_spark as to_spark
-    from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.operators.fused import fused_triples
-
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
-    docs = to_spark(spark, docs_pdf)
-    emat = np.stack(ents_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=100, seed=cfg.seed)
+    docs = documents_to_spark(spark, docs_pdf)
+    centroids = _centroids(ents_pdf, 100)
     ft, fs = fused_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
-    mt, ms = build_triples_ann(docs, ents_pdf, cfg, strategy="broadcast")
+    mentions, ms = _modular_mentions(docs, cfg)
+    mt = triples_from_links(
+        link_ivf_broadcast(
+            mentions, ents_pdf, centroids, k=cfg.k, tau=cfg.tau, nprobe=32
+        )
+    )
     key = ["subj", "span_idx", "pred", "obj"]
     assert sorted(map(tuple, ft.select(*key).collect())) == sorted(
         map(tuple, mt.select(*key).collect())
@@ -120,26 +157,13 @@ def test_triples_identical_across_partitionings(spark, corpus_small):
 def test_f16_index_holds_pr_gate(spark, corpus_small):
     """Half-precision index storage (broadcast budget cliff): links keep
     P/R >= 0.95 vs the oracle despite ~1e-3 score rounding."""
-    import numpy as np
-
-    from cli_p_spark.fixtures.generate import documents_to_spark as to_spark
-    from cli_p_spark.operators.ann import link_ivf_broadcast, train_centroids
-    from cli_p_spark.plans.pipeline import (
-        encode_mentions,
-        explode_spans,
-        split_skips,
-        triples_from_links,
-    )
-
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
-    docs = to_spark(spark, docs_pdf)
-    emat = np.stack(ents_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=100)
-    ok, _ = split_skips(encode_mentions(explode_spans(docs), cfg))
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
+    docs = documents_to_spark(spark, docs_pdf)
+    mentions, _ = _modular_mentions(docs, cfg)
     links = link_ivf_broadcast(
-        mentions, ents_pdf, centroids, k=1, tau=cfg.tau, nprobe=32,
+        mentions, ents_pdf, _centroids(ents_pdf, 100), k=1, tau=cfg.tau,
+        nprobe=32,
         index_dtype="f16",
     )
     got = triples_from_links(links).toPandas()

@@ -1,9 +1,7 @@
-"""Connected-components vs a union-find oracle; salting must not change
-results; chains/stars/singletons; determinism across partitionings."""
+"""Connected-components vs a union-find oracle; chains/stars/singletons;
+determinism across partitionings."""
 
 import random
-
-import pytest
 
 from cli_p_spark.operators.ccomp import canonical_mapping, connected_components
 
@@ -44,13 +42,12 @@ def random_graph(n_nodes=300, n_edges=350, seed=7):
     return nodes, edges
 
 
-@pytest.mark.parametrize("salt", [1, 8])
-def test_cc_matches_union_find(spark, salt):
+def test_cc_matches_union_find(spark):
     nodes, edges = random_graph()
     e = spark.createDataFrame(edges, "src string, dst string")
     got = {
         r["node"]: r["component"]
-        for r in connected_components(e, salt_buckets=salt).collect()
+        for r in connected_components(e).collect()
     }
     oracle = union_find_oracle(edges, nodes)
     touched = {a for a, b in edges} | {b for a, b in edges}
@@ -72,7 +69,7 @@ def test_cc_hub_star(spark):
     # hub-entity shape: one node connected to 500 others (skew case)
     edges = [("hub", f"x{i:04d}") for i in range(500)]
     e = spark.createDataFrame(edges, "src string, dst string")
-    got = connected_components(e, salt_buckets=8).collect()
+    got = connected_components(e).collect()
     assert len(got) == 501
     assert all(r["component"] == "hub" for r in got)
 

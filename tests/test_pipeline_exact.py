@@ -1,27 +1,34 @@
 """M1 gate: exact pipeline == NumPy oracle (P/R = 1.0) + span invariant."""
 
+import numpy as np
 import pandas as pd
 
 from cli_p_spark.config import PipelineConfig
-from cli_p_spark.fixtures.generate import documents_to_spark, entities_to_spark
+from cli_p_spark.fixtures.generate import documents_to_spark
+from cli_p_spark.operators.ann import train_centroids
+from cli_p_spark.operators.fused import fused_triples
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
-from cli_p_spark.plans.pipeline import (
-    build_triples_exact,
-    explode_spans,
-    reassemble_spans,
-)
+from cli_p_spark.plans.pipeline import explode_spans, reassemble_spans
+
+
+def _exact_triples(docs, ents_pdf, cfg=PipelineConfig()):
+    """Exact search: the one-cell IVF index probed at its only cell.
+    Returns (triples, skips)."""
+    emat = np.stack(ents_pdf["embedding"].to_numpy())
+    centroids = train_centroids(emat, nlist=1, seed=cfg.seed)
+    return fused_triples(docs, ents_pdf, centroids, cfg, nprobe=1)
 
 
 def test_exact_pipeline_matches_oracle(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
-    triples, skips = build_triples_exact(docs, ents_pdf, cfg)
+    triples, skips = _exact_triples(docs, ents_pdf, cfg)
     got = triples.toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(got, golden)
     assert p == 1.0 and r == 1.0, (p, r, len(got), len(golden))
-    # scores agree too (same float64 GEMM math)
+    # scores agree too (f64 rescore of the f32-preselected candidates)
     merged = got.merge(
         golden, on=["subj", "span_idx", "pred", "obj"], suffixes=("_s", "_o")
     )
@@ -31,10 +38,10 @@ def test_exact_pipeline_matches_oracle(spark, corpus_small):
 def test_corrupt_media_quarantined_not_fatal(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf)
-    triples, skips = build_triples_exact(docs, ents_pdf)
+    triples, skips = _exact_triples(docs, ents_pdf)
     sk = skips.toPandas()
     assert set(sk["doc_id"]) == {"docEDGE_CORRUPT"}
-    assert sk["reason"].eq("decode_error").all()
+    assert sk["skip_reason"].eq("decode_error").all()
     # the doc's OTHER span still produced a triple (run continues)
     got = triples.toPandas()
     assert (got["subj"] == "docEDGE_CORRUPT").any()
@@ -60,8 +67,8 @@ def test_idempotent_reingest(spark, corpus_small):
     doubled = pd.concat([docs_pdf, docs_pdf], ignore_index=True)
     docs2 = documents_to_spark(spark, doubled).dropDuplicates(["doc_id"])
     docs1 = documents_to_spark(spark, docs_pdf)
-    t1, _ = build_triples_exact(docs1, ents_pdf)
-    t2, _ = build_triples_exact(docs2, ents_pdf)
+    t1, _ = _exact_triples(docs1, ents_pdf)
+    t2, _ = _exact_triples(docs2, ents_pdf)
     key = ["subj", "span_idx", "pred", "obj"]
     assert sorted(map(tuple, t1.select(*key).collect())) == sorted(
         map(tuple, t2.select(*key).collect())

@@ -54,6 +54,19 @@ def test_fused_pipeline_single_exchange(spark, corpus_small):
     assert "RoundRobinPartitioning" in plan
 
 
+def test_min_neighbor_partial_min_below_exchange(spark):
+    """CC's hub-skew claim: min() partial-aggregates map-side, so a hub
+    key reaches its reducer as one partial row per map partition."""
+    from cli_p_spark.operators.ccomp import _min_neighbor
+
+    edges = spark.createDataFrame(
+        [("hub", f"x{i}") for i in range(50)], "src string, dst string"
+    )
+    plan = _plan(_min_neighbor(edges))
+    # the plan string lists operators top-down: below = later
+    assert plan.index("Exchange") < plan.index("partial_min"), plan
+
+
 def test_q1_whole_stage_codegen(spark):
     from cli_p_spark.plans.contract import q1_pricing_summary
 

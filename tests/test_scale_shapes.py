@@ -5,8 +5,17 @@ import numpy as np
 
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import corpus, documents_to_spark
+from cli_p_spark.operators.ann import train_centroids
+from cli_p_spark.operators.fused import fused_triples
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
-from cli_p_spark.plans.pipeline import build_triples_ann, build_triples_exact
+
+
+def _exact_triples(docs, ents_pdf, cfg):
+    """Exact search: the one-cell IVF index probed at its only cell."""
+    emat = np.stack(ents_pdf["embedding"].to_numpy())
+    centroids = train_centroids(emat, nlist=1, seed=cfg.seed)
+    triples, _ = fused_triples(docs, ents_pdf, centroids, cfg, nprobe=1)
+    return triples
 
 
 def test_dim512_reference_dimensionality(spark):
@@ -15,10 +24,14 @@ def test_dim512_reference_dimensionality(spark):
     cfg = PipelineConfig(dim=512)
     docs_pdf, ents_pdf = corpus(n_docs=60, n_entities=80, dim=512)
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_exact(docs, ents_pdf, cfg)
+    got = _exact_triples(docs, ents_pdf, cfg).toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, dim=512, tau=cfg.tau, k=cfg.k)
-    p, r = precision_recall(triples.toPandas(), golden)
+    p, r = precision_recall(got, golden)
     assert p == 1.0 and r == 1.0, (p, r)
+    merged = got.merge(
+        golden, on=["subj", "span_idx", "pred", "obj"], suffixes=("_s", "_o")
+    )
+    assert (merged["score_s"] - merged["score_o"]).abs().max() < 1e-9
 
 
 def test_large_entity_index_ann(spark):
@@ -28,9 +41,9 @@ def test_large_entity_index_ann(spark):
     cfg = PipelineConfig()
     docs_pdf, ents_pdf = corpus(n_docs=80, n_entities=20000)
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_ann(
-        docs, ents_pdf, cfg, nlist=100, nprobe=32, strategy="broadcast"
-    )
+    emat = np.stack(ents_pdf["embedding"].to_numpy())
+    centroids = train_centroids(emat, nlist=100, seed=cfg.seed)
+    triples, _ = fused_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
@@ -47,13 +60,14 @@ def test_topk_k10_matches_oracle(spark):
     cfg = PipelineConfig(k=10, tau=0.01)
     docs_pdf, ents_pdf = corpus(n_docs=40, n_entities=300)
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_exact(docs, ents_pdf, cfg)
-    got = triples.toPandas()
+    got = _exact_triples(docs, ents_pdf, cfg).toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=0.01, k=10)
     key = ["subj", "span_idx", "pred", "obj", "rank"]
     a = sorted(map(tuple, got[key].itertuples(index=False)))
     b = sorted(map(tuple, golden[key].itertuples(index=False)))
     assert a == b
+    merged = got.merge(golden, on=key, suffixes=("_s", "_o"))
+    assert (merged["score_s"] - merged["score_o"]).abs().max() < 1e-9
 
 
 def test_mention_generator_survives_cluster_eviction(spark):
